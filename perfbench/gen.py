@@ -242,8 +242,6 @@ def _documents(rng: np.random.Generator, n: int) -> tuple[pa.Table, dict]:
         "docs": n,
         "near_dup_share": n_near / n,
         "exact_dup_share": len(exact) / n,
-        "copy_origin": {int(i): int(o) for i, o in enumerate(origin) if o >= 0},
-        "exact_copies": exact,
     }
     return table, props
 
@@ -376,8 +374,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     args = ap.parse_args()
     props = generate(args.workload, args.seed, args.out)
-    props.pop("copy_origin", None)
-    props.pop("exact_copies", None)
     print(json.dumps(props, indent=1, default=str))
 
 

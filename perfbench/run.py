@@ -3,11 +3,12 @@
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Run from the repository root.  Generates the workload's inputs from the
-seed, builds the engine session at ``local[<usable cores>]``, runs a cold
+seed, builds the engine session at ``local[<usable cores / 2>]``, runs a cold
 first pass, warm-up passes until two consecutive passes agree within
 ``SETTLE`` (between the workload's ``min_warmup`` and ``max_warmup``
 passes), then measures ``--seconds // nominal_pass_s`` passes (at least
-one).  Outputs are checked after the timed region.  The last stdout line
+three); each op's time is its median over them.  Outputs are checked
+after the timed region.  The last stdout line
 is one JSON object with the keys ``correct``, ``attempted``, ``failed``
 and ``metrics``: the end-to-end metrics with ``--trace 0``, the per-layer
 metrics with ``--trace 1``.  The line before it holds the run metadata.
@@ -40,6 +41,7 @@ def _process_start() -> float:
 T_PROCESS_PERF = time.perf_counter() - (time.time() - _process_start())
 
 SETUP_REPS = 3
+MIN_MEASURED = 3
 SETTLE = 0.10
 DRIVER_MEMORY = "1g"
 END_TO_END = [("setup_s", "s"), ("first_pass_s", "s"), ("pass_s", "s"),
@@ -68,6 +70,12 @@ def _tree_rss_mb(pid: int) -> float:
         except OSError:
             pass
     return total / 2**20
+
+
+def _cpu_ticks() -> list[int]:
+    """The host-wide ``cpu`` line of /proc/stat (user ... steal)."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:9]]
 
 
 def _git_sha(root: str) -> str:
@@ -102,7 +110,10 @@ class Bench:
         self.root = root
         self.work = os.path.join(root, ".perfbench", f"{args.workload}-{args.seed}-{os.getpid()}")
         os.makedirs(os.path.join(self.work, "tmp"), exist_ok=True)
-        self.cores = len(os.sched_getaffinity(0))
+        # half the usable cores: the task threads, the pandas-UDF workers
+        # they feed, the JIT and GC threads and the driver then fit on the
+        # cores instead of queueing for them
+        self.cores = max(1, len(os.sched_getaffinity(0)) // 2)
 
     def conf(self, trace: bool) -> dict[str, str]:
         conf = {
@@ -151,6 +162,7 @@ class Bench:
         from workloads import WORKLOADS
 
         workload = WORKLOADS[self.args.workload]()
+        ticks0 = _cpu_ticks()
         spark = self.setup(workload)
         sc = spark.sparkContext
         jvm_pid = sc._gateway.proc.pid
@@ -163,6 +175,7 @@ class Bench:
         op_walls: list[list[float]] = []
         op_spans: list[list[int]] = []
         rss = [_tree_rss_mb(jvm_pid)]
+        between: list[float] = []
 
         def one_pass() -> float:
             walls, spans = [], []
@@ -180,25 +193,34 @@ class Bench:
                 spans.append(tracer.op)
                 if out is not None:
                     results.setdefault(op.name, []).append(out)
+                th = time.perf_counter()
                 self.hygiene(spark, tracer)
                 rss.append(_tree_rss_mb(jvm_pid))
+                between.append(time.perf_counter() - th)
             op_walls.append(walls)
             op_spans.append(spans)
             return sum(walls)
 
         first_pass = one_pass()
         warm = [one_pass() for _ in range(workload.min_warmup)]
-        settled = len(warm) > 1 and abs(warm[-1] - warm[-2]) <= SETTLE * warm[-1]
+        passes = [first_pass] + warm
+        settled = abs(passes[-1] - passes[-2]) <= SETTLE * passes[-1]
         while not settled and len(warm) < workload.max_warmup:
             warm.append(one_pass())
             settled = abs(warm[-1] - warm[-2]) <= SETTLE * warm[-1]
         n_before = len(op_walls)
-        for _ in range(max(1, int(self.args.seconds // workload.nominal_pass_s))):
+        for _ in range(max(MIN_MEASURED, int(self.args.seconds // workload.nominal_pass_s))):
             one_pass()
         measured = op_walls[n_before:]
         measured_ops = [w for p in measured for w in p]
+        # each op's median over the measured passes: a burst of host load
+        # that slows a minority of the passes does not move it
+        op_medians = [statistics.median(p[i] for p in measured)
+                      for i in range(len(workload.ops))]
 
+        ticks = [b - a for a, b in zip(ticks0, _cpu_ticks())]
         meta = {
+            "steal_share": round(ticks[7] / max(1, sum(ticks)), 4),
             "workload": self.args.workload, "seed": self.args.seed,
             "cpus": sc.defaultParallelism, "git_sha": _git_sha(self.root),
             "pyspark": __import__("pyspark").__version__,
@@ -210,11 +232,15 @@ class Bench:
             "op_walls_s": {op.name: [round(p[i], 4) for p in op_walls]
                            for i, op in enumerate(workload.ops)},
             "inputs": {k: v for k, v in self.props.items()
-                       if k not in ("copy_origin", "exact_copies", "report_files")},
+                       if k != "report_files"},
         }
         app_id = sc.applicationId
+        t_stop = time.perf_counter()
         stop_jvm()
+        t_check = time.perf_counter()
         problems = errors + workload.check(results)
+        meta["untimed_s"] = {"between_ops": sum(between), "jvm_stop": t_check - t_stop,
+                             "check": time.perf_counter() - t_check}
         meta["problems"] = [f"{key}: {msg}" for key, msg in problems[:20]]
         if self.args.trace:
             metrics, self_times = layer_metrics(
@@ -229,8 +255,8 @@ class Bench:
             metrics = {
                 "setup_s": statistics.median(self.setups),
                 "first_pass_s": first_pass,
-                "pass_s": statistics.median(sum(p) for p in measured),
-                "op_geomean_s": statistics.geometric_mean(measured_ops),
+                "pass_s": sum(op_medians),
+                "op_geomean_s": statistics.geometric_mean(op_medians),
                 "peak_rss_mb": max(rss),
             }
             units = dict(END_TO_END)
@@ -249,7 +275,9 @@ class Bench:
         op does not pay for eviction."""
         gc.collect()
         rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
-        views = [t.name for t in spark.catalog.listTables() if t.isTemporary]
+        # the session catalog directly: catalog.listTables() costs 0.1-0.4 s
+        seq = spark._jsparkSession.sessionState().catalog().listLocalTempViews("*")
+        views = [seq.apply(i).table() for i in range(seq.size())]
         tracer.count("tuning.blocks_left", len(rdds))
         tracer.count("tuning.temp_views_left", len(views))
         spark.catalog.clearCache()

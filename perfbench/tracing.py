@@ -39,7 +39,6 @@ OPERATOR_FAMILIES = {
     "operators.joins": ("op_geomean_s", MIX, ETL),
     "operators.windows": ("op_geomean_s", MIX, ETL),
     "operators.events": ("op_geomean_s", MIX, ETL),
-    "operators.dedup": ("pass_s", MIX, ETL),
     "operators.similarity": ("pass_s", MIX, ETL),
 }
 
