@@ -26,185 +26,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import __spark_entry__ as entrymod
 from dataengineer_spark.session import build_session
 
-HEADLINE = [
-    "q_e5_groupagg",
-    "q_e5_rollup",
-    "q_e5_percentile",
-    "q_e6_window",
-    "q_e6_frames",
-    "q_e1_incremental_dedup",
-    "q_e12_hof",
-    "q_e7_topk",
-    "q_e9_range_join",
-    "q_e9_asof_join",
-    "q_e9_semi_anti",
-    "q_e10_tumbling",
-    "q_e10_session",
-    "q_e10_sliding",
-    "q_e10_funnel",
-    "q_e3_topk_sim",
-    # LSH variants are the headline ANN/near-dup entries; the exact
-    # pairwise/brute-force forms are size-guarded verification baselines
-    # (BroadcastNestedLoop by design, wrong shape to showcase at scale)
-    "q_e3_lsh_topk",
-    "q_e3_hard_negatives",
-    "q_e3_knn_classify",
-    "q_e2_embed_lsh_neardup",
-    "q_e2_minhash_neardup",
-    "q_e2_simhash_neardup",
-    "q_e1_dedup",
-    "q_e4_text_stats",
-    "q_e4_langid",
-    "q_e4_tokens",
-    "q_e4_gopher_filter",
-    "q_e4_pii_redact",
-    "q_rank_tfidf",
-    "q_rank_bm25",
-    "q_e2_semantic_dedup",
-    # hashed scale forms bench; the text/portable-hash twins are the
-    # oracle-verification baselines (pinned result-identical in tests)
-    "q_e2_dup_spans_hashed",
-    "q_prep_dsir_hashed",
-    "q_dq_funnel",
-    "q_prep_decontaminate",
-    "q_e5_distinct_agg",
-    "q_e7_grouptopk_salted",
-    "q_prep_wordcount",
-    "q_f4_sectionize",
-    "q_tpch_q1",
-    "q_tpch_q3",
-    "q_tpch_q5",
-    "q_tpch_q6",
-    "q_tpch_q9",
-    "q_tpch_q10",
-    "q_tpch_q13",
-    "q_tpch_q17",
-    "q_tpch_q18",
-    "q_pipeline_dx_group",
-    "q_pipeline_curation",
-    "q_pipeline_prostate",
-    "q_e4_perplexity",
-    "q_e1_dup_weights",
-    "q_e5_corr_stats",
-    "q_prep_chunk",
-    "q_e3_kmeans",
-    # round-4 additions: sketch, ANN-compression, and decontamination
-    # scale paths (each also oracled at sf0.01)
-    "q_e5_cms_topk",
-    "q_e3_pq_topk",
-    "q_prep_bloom_decontaminate",
-    "q_e10_anomaly",
-    "q_f9_bpe_train",
-    # round-4c additions: graph power iteration, collocation mining,
-    # cohort/funnel analytics, blocked ER join
-    "q_graph_pagerank",
-    # 3-iteration twin isolates fixed setup (edge build/degree/nodes)
-    # from per-round cost: wall(5)-wall(3) = 2 iterations
-    "q_graph_pagerank3",
-    "q_f10_pmi",
-    "q_e10_retention",
-    "q_e10_attribution",
-    "q_e9_fuzzy_join",
-    # output-bounded ER form (round-8): top-k matches per entity — the
-    # shape a real ER user runs first on clone-heavy corpora
-    "q_e9_fuzzy_join_topk",
-    "q_e5_regression",
-    "q_e5_rfm",
-    "q_rank_rrf",
-    "q_e3_dim_stats",
-    "q_e4_oov",
-    # FAISS-style composite index: coarse-cell pruning + ADC scan —
-    # the ANN shape that actually ships at corpus scale
-    "q_e3_ivfpq_topk",
-    # trained end-to-end composite: fused k-means fits + cell-prune + ADC
-    "q_e3_ivfpq_trained",
-    # lake-resident index: cell-partitioned parquet, probe = partition
-    # pruning + LUT scan over codes only
-    "q_e3_ivfpq_stored",
-    # pipeline-final sink: hash-sharded export + read-back manifest
-    "q_k8_shard_export",
-    # trained-BPE corpus tokenization (map-only expression chain)
-    "q_f12_bpe_tokenize",
-    # round-5 additions: corpus normalization, mixture upsampling,
-    # semantic decontamination, duplication census, token budgeting
-    "q_f13_normalize",
-    "q_prep_upsample",
-    # Arrow/BLAS engine layer takes the bench slot; the interpreted-HOF
-    # expression twin q_prep_semantic_decontaminate is the oracled
-    # verification baseline (pinned result-identical in tests)
-    "q_prep_semantic_decontaminate_arrow",
-    "q_dq_dup_rate",
-    "q_prep_budget",
-    "q_prep_temperature_mixture",
-    "q_scrub_boilerplate",
-    "q_k6_scd2_lookup",
-    "q_e1_dedup_by",
-    "q_a6_abtest",
-    # round-6 additions: the lake-maintenance story — these are
-    # write-dominated (fresh temp-dir lake per invocation), tracked
-    # round-over-round because at deployment their cost IS the pipeline
-    # (ingest probes, CDC merge, dead-letter routing, schema evolution)
-    # Arrow-engine scale forms bench (the portable-hash twins are the
-    # oracled verification baselines, ~29x slower on the per-char fold)
-    "q_e2_incremental_neardup_arrow",
-    "q_k10_cdc_apply",
-    "q_k9_quarantine",
-    "q_s9_schema_evolution",
-    "q_e11_stream_neardup_arrow",
-    # round-6 continuation: curation / evaluation additions
-    "q_prep_kfold",
-    "q_a7_pr_curve",
-    "q_e3_ann_recall",
-    "q_e4_fertility",
-    "q_f14_vocab_coverage",
-    "q_e6_range_frame",
-    "q_e10_transitions",
-    "q_prep_length_buckets",
-    "q_e3_pq_error",
-    "q_a8_bootstrap",
-    "q_e9_interval_join",
-    "q_e2_neardup_recall",
-    "q_e4_novelty",
-    "q_dq_cross_source",
-    "q_e10_conversation",
-    "q_e10_decay",
-    "q_a9_wilson",
-    "q_e9_blocking_quality",
-    "q_rank_fair_trim",
-    "q_pipeline_curation2",
-    "q_dq_datacard",
-    "q_e2_containment",
-    "q_dq_mad_outliers",
-    "q_e9_interval_coverage",
-    "q_rank_ndcg",
-    "q_rank_rbo",
-    "q_prep_preference_pairs",
-    "q_e10_cusum",
-    "q_dq_benford",
-    "q_a10_bradley_terry",
-    "q_e6_ewma",
-    "q_prep_curriculum",
-    "q_dq_label_noise",
-    "q_a11_paired_t",
-    "q_e3_pca_power",
-    # single-iteration twin: wall(2-iter) - wall(1-iter) = one power
-    # iteration (the pagerank3 breakdown pattern)
-    "q_e3_pca_power1",
-    "q_e9_proration",
-    "q_rank_calibrate",
-    "q_dq_lang_mismatch",
-    "q_prep_churn_labels",
-    "q_dq_gini",
-    "q_a12_sliced_auc",
-    "q_e9_sorted_blocking",
-    "q_e3_embed_outliers",
-    "q_e10_seasonal",
-    "q_dq_fd",
-    "q_e10_conversion_lag",
-    "q_dq_psi",
-    "q_dq_kanon",
-    "q_e10_burstiness",
-]
+#: the headline tier (best of 2), in registry order — each entry's reason
+#: for being here sits on its ``__spark_entry__.REGISTRY`` row
+HEADLINE = [q.name for q in entrymod.REGISTRY if q.headline]
 
 #: Host-speed calibration probes (VERDICT r8 item 5): three cheap,
 #: plan-stable queries (narrow projection / hash agg / pushed-filter agg)
@@ -464,8 +288,9 @@ def main() -> None:
     # core counts (VERDICT r11 item 5: the driver's 8-core scaling run
     # keyed to the same filename and overwrote the 32-core artifact)
     tag = "" if abs(sf - 0.1) < 1e-9 else f"_sf{sf:g}"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if cpus != "32":
+    # the core count the session really runs with, not the env default
+    cpus = spark.sparkContext.defaultParallelism
+    if cpus != 32:
         tag += f"_c{cpus}"
     detail = os.path.join(repo, f"BENCH_DETAIL_r{n:02d}{tag}.json")
     try:

@@ -80,7 +80,7 @@ def stream_runtime_session(
                 )
     width = session_width
     if sizable and paths:
-        width = max(floor, min(session_width, -(-total // (per_part_mb << 20))))
+        width = min(session_width, max(floor, -(-total // (per_part_mb << 20))))
     child.conf.set("spark.sql.shuffle.partitions", str(int(width)))
     if not no_data_batches:
         child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")

@@ -351,6 +351,10 @@ def sql_literal(v) -> str:
         return "array(" + ",".join(sql_literal(x) for x in v) + ")"
     if v is None:
         return "CAST(NULL AS DOUBLE)"
+    if isinstance(v, str):
+        # Spark's parser un-escapes backslash sequences inside string
+        # literals, so the backslash itself is escaped first, then quotes
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, int):

@@ -437,6 +437,21 @@ class TestQuarantineWrite:
         }
         assert manifest["_valid"] == 2  # second append counted cumulatively
 
+    def test_rule_names_with_escapes_read_back_identical(self, spark, catalog):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame([(1, -1.0)], "id long, price double")
+        # backslash-t must stay two characters, not become a tab
+        names = [r"tab\there", "trailing\\", "it's"]
+        checks = {n: F.col("price") > 0 for n in names}
+        manifest = {
+            r["rule"]: r["n"]
+            for r in catalog.quarantine_write(df, "t3", checks).collect()
+        }
+        assert manifest == {"_valid": 0, "_quarantined": 1} | dict.fromkeys(
+            names, 1
+        )
+
 
 class TestMergedSchemaScan:
     def test_old_files_null_fill_new_column(self, spark, tmp_path):

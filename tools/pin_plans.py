@@ -25,54 +25,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
 from tools.plan_report import plan_of, summarize  # noqa: E402
 
-#: plan-pinned headline queries — non-effectful (plan builds are pure),
-#: spanning the engine's main plan families: aggregation, windows, joins,
-#: LSH/ANN, text, ranking, TPC-H, pipelines, dedup probes
-PINNED_QUERIES = [
-    "q_e5_groupagg",
-    "q_e5_rollup",
-    "q_e5_percentile",
-    "q_e5_distinct_agg",
-    "q_e6_window",
-    "q_e6_frames",
-    "q_e7_topk",
-    "q_e7_grouptopk_salted",
-    "q_e9_range_join",
-    "q_e9_asof_join",
-    "q_e9_semi_anti",
-    "q_e9_fuzzy_join",
-    "q_e10_tumbling",
-    "q_e10_session",
-    "q_e10_funnel",
-    "q_e3_topk_sim",
-    "q_e3_lsh_topk",
-    "q_e3_ivfpq_topk",
-    "q_e2_minhash_neardup",
-    "q_e2_simhash_neardup",
-    "q_e2_incremental_neardup_arrow",
-    "q_e1_dedup",
-    "q_e1_incremental_dedup",
-    "q_e4_text_stats",
-    "q_e4_langid",
-    "q_e4_gopher_filter",
-    "q_rank_tfidf",
-    "q_rank_bm25",
-    "q_dq_benford",
-    "q_dq_funnel",
-    "q_tpch_q1",
-    "q_tpch_q3",
-    "q_tpch_q9",
-    "q_tpch_q17",
-    "q_pipeline_dx_group",
-    "q_f4_sectionize",
-    "q_f5_truncate_tokens",
-    "q_f12_bpe_tokenize",
-    "q_graph_triangles",
-    "q_graph_bfs_level",
-    "q_prep_wordcount",
-]
+#: plan-pinned queries (``pin=True`` on their ``__spark_entry__.REGISTRY``
+#: row) — non-effectful (plan builds are pure), spanning the engine's main
+#: plan families: aggregation, windows, joins, LSH/ANN, text, ranking,
+#: TPC-H, pipelines, dedup probes
+PINNED_QUERIES = [q.name for q in entrymod.REGISTRY if q.pin]
 
 PINS_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -94,8 +54,6 @@ def build_test_session():
 
 
 def main() -> int:
-    import __spark_entry__ as entrymod
-
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = build_test_session()
     qs = entrymod.queries()
